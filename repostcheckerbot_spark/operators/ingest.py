@@ -36,8 +36,9 @@ interface.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from repostcheckerbot_spark.config import PipelineConfig
@@ -60,9 +61,6 @@ class IncrementalPipeline:
     def corpus_docs(self) -> DataFrame | None:
         return self.wh.read("corpus_docs") if self.wh.exists("corpus_docs") else None
 
-    def corpus_bands(self) -> DataFrame | None:
-        return self.wh.read("corpus_bands") if self.wh.exists("corpus_bands") else None
-
     def edges(self) -> DataFrame | None:
         return self.wh.read("edges") if self.wh.exists("edges") else None
 
@@ -82,6 +80,18 @@ class IncrementalPipeline:
             so the lineage shows WHERE a slow micro-batch spent its time."""
             return round(time.monotonic() - t0, 3)
 
+        # J5 keys, materialized up front: the tombstone frame's lineage is
+        # caller-owned and may read a table the persist pool below rewrites
+        # (e.g. a corpus_docs filter), so it must not run lazily mid-pool.
+        dead = None
+        if tombstones is not None:
+            dead = tombstones.select("conv_id").distinct().localCheckpoint(eager=True)
+        # After the repair, a corpus implies the corpus_reps index and the
+        # clusters table; no clusters table means a fresh warehouse.
+        has_corpus = self.wh.exists("corpus_docs")
+        if has_corpus:
+            self._repair(metrics)
+
         # Job-launch discipline (this batch's wall time is dominated by the
         # ~1-3 s driver floor PER JOB, not by data volume — BENCH/BASELINE.md):
         # every checkpoint in this method is LAZY and materialized by the next
@@ -91,7 +101,7 @@ class IncrementalPipeline:
             apply_ingest_gate(new_transcripts, cfg.retention_days, now=now)
         ).localCheckpoint(eager=False)
 
-        if self.wh.exists("corpus_docs"):
+        if has_corpus:
             # J1: identity skip — already-logged conv_ids never re-enter.
             # Bucket-pruned: only corpus buckets that can contain a batch
             # conv_id are scanned (I/O ∝ batch buckets, not corpus). The
@@ -149,12 +159,11 @@ class IncrementalPipeline:
         # r3-pre shape re-aggregated ALL of corpus_docs every micro-batch.
         # The invariant the star argument needs is "every stored copy of a
         # sha is connected to reps[sha]" — maintained below (persist section)
-        # and under purges (_purge_keys re-star). Legacy warehouses without
-        # the index fall back to the corpus aggregation once; the upsert
-        # below creates the index for subsequent batches.
+        # and under purges (_purge_keys re-star). A corpus without the index
+        # had it rebuilt by the repair step at batch start.
         probe = batch_docs.select("conv_id", "doc_sha")
         batch_reps = probe.groupBy("doc_sha").agg(F.min("conv_id").alias("brep"))
-        if self.wh.exists("corpus_reps"):
+        if has_corpus:
             crep_src, rep_pruning = self.wh.read_bucket_pruned(
                 "corpus_reps",
                 probe.select("doc_sha"),
@@ -166,22 +175,11 @@ class IncrementalPipeline:
             reps = batch_reps.join(crep, "doc_sha", "left").select(
                 "doc_sha", F.coalesce("crep", "brep").alias("rep")
             )
-        elif self.wh.exists("corpus_docs"):
-            corpus_reps = (
-                self.wh.read("corpus_docs")
-                .select("conv_id", "doc_sha")
-                .groupBy("doc_sha")
-                .agg(F.min("conv_id").alias("crep"))
-            )
-            reps = batch_reps.join(corpus_reps, "doc_sha", "left").select(
-                "doc_sha", F.coalesce("crep", "brep").alias("rep")
-            )
         else:
             reps = batch_reps.select("doc_sha", F.col("brep").alias("rep"))
         # reps feeds the exact star edges AND the corpus_reps merge; the lazy
-        # checkpoint cuts the corpus_reps-file lineage so the overlap plan
-        # below can rewrite the table while the scoring job still runs
-        # (non-overlap paths: the new_edges aggregate materializes it).
+        # checkpoint cuts the corpus_reps-file lineage so the persist pool
+        # below can rewrite the table while the scoring job still runs.
         reps = reps.localCheckpoint(eager=False)
         exact = (
             probe.join(reps, "doc_sha")
@@ -207,8 +205,6 @@ class IncrementalPipeline:
         # (blocking.py:21-27) and eagerly checkpointed: it is tiny (≤ cap ×
         # colliding buckets), and the metrics counts + candidate join all read
         # the materialized pool instead of rescanning the corpus.
-        from pyspark.sql import Window
-
         batch_keys = batch_bands.select(*key).distinct()
         if self.wh.exists("corpus_bands"):
             corpus_pruned, pruning = self.wh.read_bucket_pruned(
@@ -266,7 +262,7 @@ class IncrementalPipeline:
         # pair are ever joined, so the corpus side is bucket-pruned on the
         # candidate id set (I/O ∝ candidates, not corpus)
         texts = batch_docs.select("conv_id", "doc_sha", "norm_text")
-        if self.wh.exists("corpus_docs"):
+        if has_corpus:
             cand_ids = (
                 cand.select(F.col("conv_id_a").alias("conv_id"))
                 .unionByName(cand.select(F.col("conv_id_b").alias("conv_id")))
@@ -283,75 +279,6 @@ class IncrementalPipeline:
         # texts is the LAST corpus_docs reader in the scoring lineage; the
         # lazy checkpoint frees the table for the concurrent docs merge below
         texts = texts.localCheckpoint(eager=False)
-
-        # ---- persist closures (ST5 idempotent upserts) ----------------------
-        # Defined here so the overlap plan below can launch them while the
-        # scoring job still runs. Each touches ONE table and reads only
-        # materialized checkpoints plus its own table's files.
-        def _persist_docs() -> dict:
-            # corpus_docs is hash-bucketed by conv_id: the merge rewrites
-            # only the buckets this batch touches (I/O ∝ batch, not corpus)
-            return self.wh.upsert(
-                "corpus_docs",
-                batch_docs.select(*DOC_COLS),
-                key="conv_id",
-                n_buckets=cfg.warehouse_buckets,
-                touched=_tb("corpus_docs", conv_buckets),
-            )
-
-        def _persist_reps() -> None:
-            # corpus_reps index: upsert the batch shas' rep rows (existing
-            # shas rewrite their identical row — idempotent)
-            self.wh.upsert(
-                "corpus_reps",
-                reps.select("doc_sha", "rep"),
-                key="doc_sha",
-                n_buckets=cfg.warehouse_buckets,
-                touched=_tb("corpus_reps", sha_buckets),
-            )
-
-        def _persist_bands() -> None:
-            # corpus_bands: hash-bucketed by band_hash (append-only — band
-            # rows are immutable per conv) so the probe prunes at scan time
-            self.wh.append_bucketed(
-                "corpus_bands", batch_bands, key="band_hash", n_buckets=cfg.warehouse_buckets
-            )
-
-        def _persist_edges() -> dict:
-            # edges: bucketed MERGE on the pair key (bucketed by conv_id_a) —
-            # write I/O ∝ new edges' buckets.
-            return self.wh.upsert(
-                "edges",
-                new_edges.dropDuplicates(["conv_id_a", "conv_id_b"]),
-                key=["conv_id_a", "conv_id_b"],
-                n_buckets=cfg.warehouse_buckets,
-                touched=_tb("edges", edge_buckets),
-            )
-
-        # ---- overlap plan (guide §2.6: back-fill the executor pool) ---------
-        # The scoring leg (candidate join → difflib → new-edges aggregate)
-        # reads ONLY checkpointed frames once `texts` and `reps` are
-        # materialized, so the bands/docs/reps persists run CONCURRENTLY with
-        # the CPU-bound difflib job instead of serially after it: batch wall
-        # = max(scoring, persists), not their sum. Tombstoned batches keep the
-        # strict order (the tombstone frame's lineage is caller-owned and must
-        # not race a table rewrite).
-        overlap = self.wh.exists("corpus_reps") and tombstones is None
-        pool_exec = None
-        f_docs = f_reps = f_bands = None
-        if overlap:
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool_exec = ThreadPoolExecutor(max_workers=6)
-            f_bands = pool_exec.submit(_persist_bands)
-            # two tiny concurrent jobs materialize the checkpoints (their
-            # compute is work the scoring job needed anyway)
-            f_t = pool_exec.submit(texts.count)
-            f_r = pool_exec.submit(reps.count)
-            f_t.result()
-            f_r.result()
-            f_docs = pool_exec.submit(_persist_docs)
-            f_reps = pool_exec.submit(_persist_reps)
 
         # exact-exclusion (J4) is SHA-INEQUALITY, not an edge anti-join: exact
         # edges are stars now, so two non-rep members of one sha group never
@@ -386,116 +313,155 @@ class IncrementalPipeline:
         new_edges = exact.unionByName(fuzzy)
 
         # ---- J5: drop edges touching upstream-deleted conversations ---------
-        if tombstones is not None:
-            dead = tombstones.select("conv_id")
+        if dead is not None:
             new_edges = new_edges.join(
                 dead.withColumnRenamed("conv_id", "conv_id_a"), "conv_id_a", "left_anti"
             ).join(dead.withColumnRenamed("conv_id", "conv_id_b"), "conv_id_b", "left_anti")
-        # lazy: the metric aggregate materializes the checkpoint — it MUST run
-        # before the edges merge rewrites the table this batch appends to (in
-        # overlap mode the scoring lineage reads only checkpoints, so the
-        # docs/reps/bands rewrites may already be in flight). The same
-        # aggregate also yields the edge-table bucket ids the edges merge
-        # will touch (fused, like the batch_docs aggregate above).
-        new_edges = new_edges.localCheckpoint(eager=False)
-        erow = new_edges.agg(
-            F.count(F.lit(1)).alias("n"), _b("conv_id_a").alias("eb")
-        ).collect()[0]
-        edge_buckets = list(erow["eb"])
-        metrics.record_count("ingest.new_edges", int(erow["n"]), wall_s=_lap())
 
-        # ---- full-recompute clusters swap, hoisted INTO the persist pool ----
-        # Below the hybrid threshold the cluster update is a full CC +
-        # clusters swap (see the growth section below). Its inputs are all
-        # available BEFORE the four state writes from pre-merge state:
+        # ---- cluster update: full recompute or incremental merge -----------
+        # HYBRID: below cfg.incremental_clusters_min_corpus rows the full
+        # recompute (driver union-find + one small write) is strictly cheaper
+        # than the affected-set joins + bucketed merge of the growth section
+        # below — measured 11.2 s vs 15.9 s per micro-batch at a 5k-conv
+        # corpus — so small states take the full path and big states the
+        # incremental one. A fresh warehouse (no clusters table) always runs
+        # the full CC, which creates the table.
+        #
+        # The threshold input is the MAINTAINED row count in the clusters
+        # table meta (Iceberg snapshot-summary analog), not a count() job per
+        # batch: clusters carries exactly one row per corpus conversation
+        # (vertices = all corpus docs in both paths), so the count advances by
+        # n_batch per batch and by −n_deleted per purge (recompute_clusters
+        # re-seeds it). A first batch that died between its clusters write
+        # and the set_meta below leaves no stat: count once.
+        has_clusters = self.wh.exists("clusters")
+        old_n = 0
+        if has_clusters:
+            old_n = self.wh.get_meta("clusters", "n_rows")
+            if old_n is None:
+                old_n = self.wh.read("clusters").count()
+        full_cc = not has_clusters or old_n < cfg.incremental_clusters_min_corpus
+
+        # ---- persist closures (ST5 idempotent upserts) ----------------------
+        # Each touches ONE table and reads only materialized checkpoints plus
+        # its own table's files, so the pool below can run them while the
+        # scoring job still runs.
+        def _persist_docs() -> dict:
+            # corpus_docs is hash-bucketed by conv_id: the merge rewrites
+            # only the buckets this batch touches (I/O ∝ batch, not corpus)
+            return self.wh.upsert(
+                "corpus_docs",
+                batch_docs.select(*DOC_COLS),
+                key="conv_id",
+                n_buckets=cfg.warehouse_buckets,
+                touched=_tb("corpus_docs", conv_buckets),
+            )
+
+        def _persist_reps() -> None:
+            # corpus_reps index: upsert the batch shas' rep rows (existing
+            # shas rewrite their identical row — idempotent)
+            self.wh.upsert(
+                "corpus_reps",
+                reps.select("doc_sha", "rep"),
+                key="doc_sha",
+                n_buckets=cfg.warehouse_buckets,
+                touched=_tb("corpus_reps", sha_buckets),
+            )
+
+        def _persist_bands() -> None:
+            # corpus_bands: hash-bucketed by band_hash (append-only — band
+            # rows are immutable per conv) so the probe prunes at scan time
+            self.wh.append_bucketed(
+                "corpus_bands", batch_bands, key="band_hash", n_buckets=cfg.warehouse_buckets
+            )
+
+        def _persist_edges(edge_buckets: list[int]) -> dict:
+            # edges: bucketed MERGE on the pair key (bucketed by conv_id_a) —
+            # write I/O ∝ new edges' buckets.
+            return self.wh.upsert(
+                "edges",
+                new_edges.dropDuplicates(["conv_id_a", "conv_id_b"]),
+                key=["conv_id_a", "conv_id_b"],
+                n_buckets=cfg.warehouse_buckets,
+                touched=_tb("edges", edge_buckets),
+            )
+
+        def _recompute_full(cc_edges: DataFrame) -> None:
+            # bounded by the hybrid threshold: old_n < min_corpus rows, so the
+            # driver union-find path applies (its edge bound is checked inside
+            # connected_components; above it the distributed path still only
+            # reads the checkpoint)
+            vertices = batch_docs.select("conv_id")
+            if has_clusters:
+                vertices = self.wh.read("clusters").select("conv_id").unionByName(vertices)
+            self._write_clusters(
+                connected_components(
+                    cc_edges, vertices=vertices, max_iterations=cfg.cc_max_iterations
+                )
+            )
+
+        # ---- persist pool (guide §2.6: back-fill the executor pool) ---------
+        # The scoring leg (candidate join → difflib → new-edges aggregate)
+        # reads ONLY checkpointed frames once `texts` and `reps` are
+        # materialized, so the bands/docs/reps persists run CONCURRENTLY with
+        # the CPU-bound difflib job instead of serially after it: batch wall
+        # = max(scoring, persists), not their sum.
+        #
+        # The full-recompute clusters swap joins the pool after the scoring
+        # aggregate. Its inputs are all available from pre-merge state:
         #   edges    ≡ old edges table ∪ new_edges checkpoint (exactly what
         #              the post-merge table will contain)
         #   vertices ≡ old clusters conv_ids ∪ batch conv_ids (the clusters
         #              table carries one row per corpus conversation — the
         #              invariant both growth paths and the purge janitor
         #              maintain)
-        # and the clusters table is the ONE table none of the four persists
-        # touches, so the whole recompute runs as a FIFTH concurrent task:
-        # batch wall = max(persists, clusters swap), not their sum. The old
+        # and clusters is the ONE table no other persist touches. The old
         # edge files are swapped by _persist_edges mid-pool, so the union is
         # EAGERLY checkpointed first — every CC job then reads the
         # checkpoint, never the live files.
-        if self.wh.exists("clusters"):
-            old_n = self.wh.get_meta("clusters", "n_rows")
-            if old_n is None:
-                old_n = self.wh.read("clusters").count()
-        else:
-            old_n = -1
-        full_cc_in_pool = (
-            self.wh.exists("corpus_reps")
-            and 0 <= old_n < cfg.incremental_clusters_min_corpus
-        )
-        if full_cc_in_pool:
+        #
+        # Every exit, a failed write included, waits for the in-flight
+        # writes: no table rewrite may land after process_batch returns.
+        pool = ThreadPoolExecutor(max_workers=6)
+        try:
+            f_bands = pool.submit(_persist_bands)
+            # two tiny concurrent jobs materialize the checkpoints (their
+            # compute is work the scoring job needed anyway)
+            f_t = pool.submit(texts.count)
+            f_r = pool.submit(reps.count)
+            f_t.result()
+            f_r.result()
+            f_docs = pool.submit(_persist_docs)
+            f_reps = pool.submit(_persist_reps)
+            # the scoring job. Under AQE even the lazy checkpoint call runs
+            # every shuffle stage (difflib included), so it comes after the
+            # submits above. The aggregate materializes new_edges BEFORE the
+            # edges merge rewrites the table this batch appends to, and yields
+            # the edge-table bucket ids that merge will touch (fused, like
+            # the batch_docs aggregate above).
+            new_edges = new_edges.localCheckpoint(eager=False)
+            erow = new_edges.agg(
+                F.count(F.lit(1)).alias("n"), _b("conv_id_a").alias("eb")
+            ).collect()[0]
+            metrics.record_count("ingest.new_edges", int(erow["n"]), wall_s=_lap())
             cc_edges = new_edges.select("conv_id_a", "conv_id_b")
-            if self.wh.exists("edges"):
+            if full_cc and self.wh.exists("edges"):
                 cc_edges = (
-                    self.wh.read("edges").select("conv_id_a", "conv_id_b").unionByName(cc_edges)
+                    self.wh.read("edges")
+                    .select("conv_id_a", "conv_id_b")
+                    .unionByName(cc_edges)
+                    .localCheckpoint(eager=True)
                 )
-            cc_edges = cc_edges.localCheckpoint(eager=True)
-            cc_vertices = (
-                self.wh.read("clusters")
-                .select("conv_id")
-                .unionByName(batch_docs.select("conv_id"))
-            )
-
-            def _recompute_full() -> None:
-                # bounded by the hybrid threshold: old_n < min_corpus rows,
-                # so the driver union-find path applies (≤100k edges checked
-                # inside connected_components; above it the distributed path
-                # still only reads the checkpoint)
-                self.wh.upsert_replace(
-                    "clusters",
-                    connected_components(
-                        cc_edges, vertices=cc_vertices, max_iterations=cfg.cc_max_iterations
-                    ),
-                )
-
-        if overlap:
-            # docs/reps/bands have been racing the scoring job since before
-            # difflib ran; only edges + the clusters swap remain to launch.
-            f_edges = pool_exec.submit(_persist_edges)
-            f_clusters = pool_exec.submit(_recompute_full) if full_cc_in_pool else None
+            f_edges = pool.submit(_persist_edges, list(erow["eb"]))
+            f_clusters = pool.submit(_recompute_full, cc_edges) if full_cc else None
             stats = f_docs.result()
             f_reps.result()
             f_bands.result()
             edge_stats = f_edges.result()
             if f_clusters is not None:
                 f_clusters.result()
-            pool_exec.shutdown()
-        elif self.wh.exists("corpus_reps"):
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=5) as pool:
-                f_docs = pool.submit(_persist_docs)
-                f_reps = pool.submit(_persist_reps)
-                f_bands = pool.submit(_persist_bands)
-                f_edges = pool.submit(_persist_edges)
-                f_clusters = pool.submit(_recompute_full) if full_cc_in_pool else None
-                stats = f_docs.result()
-                f_reps.result()
-                f_bands.result()
-                edge_stats = f_edges.result()
-                if f_clusters is not None:
-                    f_clusters.result()
-        else:
-            # legacy warehouse without the reps index: the backfill seed
-            # reads the POST-merge corpus (a batch-only seed would make old
-            # shas look new to later probes and silently split their groups),
-            # so the docs merge must land first — sequential on this path.
-            stats = _persist_docs()
-            seed = (
-                self.wh.read("corpus_docs")
-                .groupBy("doc_sha")
-                .agg(F.min("conv_id").alias("rep"))
-            )
-            self.wh.upsert("corpus_reps", seed, key="doc_sha", n_buckets=cfg.warehouse_buckets)
-            _persist_bands()
-            edge_stats = _persist_edges()
+        finally:
+            pool.shutdown(wait=True, cancel_futures=True)
         metrics.record_count(
             "ingest.upsert_corpus_docs",
             stats["rows_written"] or 0,
@@ -525,25 +491,9 @@ class IncrementalPipeline:
         #               edges, vertices = affected ∪ batch
         # and MERGE the sub-assignment into the bucketed clusters table —
         # work and write I/O ∝ batch-touched components, not corpus.
-        #
-        # HYBRID: below cfg.incremental_clusters_min_corpus rows the full
-        # recompute (driver union-find + one small write) is strictly cheaper
-        # than the affected-set joins + bucketed merge — measured 11.2 s vs
-        # 15.9 s per micro-batch at a 5k-conv corpus — so small states take
-        # the full path and big states the incremental one. First batch (no
-        # clusters yet) always runs the full CC.
-        #
-        # The threshold input is the MAINTAINED row count in the clusters
-        # table meta (Iceberg snapshot-summary analog), not a count() job per
-        # batch: clusters carries exactly one row per corpus conversation
-        # (vertices = all corpus docs in both paths), so the count advances by
-        # n_batch per batch and by −n_deleted per purge (recompute_clusters
-        # re-seeds it). Legacy warehouses without the stat count once.
-        # (old_n was resolved above the persist pool; the common full-
-        # recompute case already ran there as the fifth concurrent task.)
-        if full_cc_in_pool:
-            metrics.record_count("ingest.clusters_swap", 0, wall_s=_lap(), in_pool=True)
-        elif old_n >= cfg.incremental_clusters_min_corpus:
+        if full_cc:
+            metrics.record_count("ingest.clusters_swap", 0, wall_s=_lap())
+        else:
             old_clusters = self.wh.read("clusters")
             touched = (
                 new_edges.select(F.col("conv_id_a").alias("conv_id"))
@@ -579,24 +529,9 @@ class IncrementalPipeline:
                 buckets_touched=cstats["buckets_touched"],
                 buckets_total=cstats["buckets_total"],
             )
-        else:
-            clusters = connected_components(
-                all_edges,
-                vertices=self.wh.read("corpus_docs").select("conv_id"),
-                max_iterations=cfg.cc_max_iterations,
-            )
-            if self.wh.exists("clusters"):
-                # full recompute: a straight bucketed swap — the MERGE
-                # machinery (touched-bucket read + anti-join + checkpoint)
-                # buys nothing when every row is being replaced
-                self.wh.upsert_replace("clusters", clusters)
-            else:
-                # first write creates the bucketed layout + meta the
-                # incremental path merges into later
-                self.wh.upsert("clusters", clusters, key="conv_id", n_buckets=cfg.warehouse_buckets)
         # advance the maintained clusters row count: one row per corpus conv,
         # and every batch doc is NEW (identity skip) — no count() job needed
-        self.wh.set_meta("clusters", "n_rows", max(old_n, 0) + n_batch)
+        self.wh.set_meta("clusters", "n_rows", old_n + n_batch)
         metrics.record_count("ingest.batch", 0, wall_s=time.monotonic() - t0)
         metrics.flush()
         return {
@@ -605,6 +540,35 @@ class IncrementalPipeline:
             "edges": all_edges,
             "clusters": self.wh.read("clusters"),
         }
+
+    def _repair(self, metrics: MetricsSink) -> None:
+        """Rebuild ``corpus_reps`` or ``clusters`` when ``corpus_docs``
+        exists without it: a warehouse written before the index existed, or
+        a first batch that died between its writes. Both tables are functions
+        of corpus_docs (+ edges), so after this a corpus always has both."""
+        if not self.wh.exists("corpus_reps"):
+            # group min = a member every stored copy is connected to (the
+            # star invariant the exact probe needs; see process_batch)
+            seed = self.wh.read("corpus_docs").groupBy("doc_sha").agg(F.min("conv_id").alias("rep"))
+            stats = self.wh.upsert(
+                "corpus_reps", seed, key="doc_sha", n_buckets=self.cfg.warehouse_buckets
+            )
+            metrics.record_count("ingest.repair", stats["rows_written"], table="corpus_reps")
+        if not self.wh.exists("clusters"):
+            self.recompute_clusters()
+            metrics.record_count(
+                "ingest.repair", self.wh.get_meta("clusters", "n_rows"), table="clusters"
+            )
+
+    def _write_clusters(self, clusters: DataFrame) -> None:
+        """Replace the whole clusters table: a straight bucketed swap — the
+        MERGE machinery (touched-bucket read + anti-join) buys nothing when
+        every row is replaced — or, on the first write, the bucketed layout +
+        meta the incremental path merges into later."""
+        if self.wh.exists("clusters"):
+            self.wh.upsert_replace("clusters", clusters)
+        else:
+            self.wh.upsert("clusters", clusters, key="conv_id", n_buckets=self.cfg.warehouse_buckets)
 
     # -- janitors (reference §3.4) -------------------------------------------
     def _purge_keys(self, dead: DataFrame) -> int:
@@ -703,7 +667,7 @@ class IncrementalPipeline:
             vertices=self.wh.read("corpus_docs").select("conv_id"),
             max_iterations=self.cfg.cc_max_iterations,
         )
-        self.wh.upsert_replace("clusters", clusters)
+        self._write_clusters(clusters)
         # re-seed the maintained row count (one row per surviving corpus conv;
         # purges are rare relative to batches, so one count here is fine)
         self.wh.set_meta("clusters", "n_rows", self.wh.read("clusters").count())

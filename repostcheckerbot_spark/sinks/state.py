@@ -178,9 +178,10 @@ class Warehouse:
         ``touched``: pre-computed SUPERSET of the batch rows' bucket ids
         (fused into an aggregate the caller already ran — saves the internal
         bucket-id collect job). Must cover every df row's bucket under
-        pmod(xxhash64(keys[0]), n_buckets): a df row landing in an unlisted
-        bucket would dynamic-overwrite that bucket WITHOUT its existing rows.
-        Extra listed buckets are read and rewritten byte-identically (safe).
+        pmod(xxhash64(keys[0]), n_buckets): a df row in an unlisted bucket
+        raises ``ValueError`` before any bucket is swapped, leaving the table
+        unchanged. Extra listed buckets are read and rewritten
+        byte-identically (safe).
         """
         keys = [key] if isinstance(key, str) else list(key)
         meta = self._read_table_meta(table)
@@ -247,6 +248,14 @@ class Warehouse:
         merged.repartition(F.col("_bucket")).write.mode("overwrite").partitionBy(
             "_bucket"
         ).parquet(staged)
+        unlisted = sorted(
+            {int(d.split("=", 1)[1]) for d in os.listdir(staged) if d.startswith("_bucket=")}
+            - set(touched)
+        )
+        if unlisted:
+            # swapping only the listed buckets would drop these rows
+            shutil.rmtree(staged, ignore_errors=True)
+            raise ValueError(f"upsert into {table}: rows in buckets {unlisted} not in touched")
         rows = 0
         for b in touched:
             src = f"{staged}/_bucket={b}"

@@ -3,12 +3,18 @@ tombstone purge, idempotent re-sweep (reference ST4/ST5)."""
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
 
 from repostcheckerbot_spark.config import PipelineConfig
+from repostcheckerbot_spark.operators import ingest
 from repostcheckerbot_spark.operators.ingest import IncrementalPipeline
 from repostcheckerbot_spark.sinks.state import Warehouse
 
@@ -74,7 +80,7 @@ def test_reprocessing_same_batch_is_idempotent(spark, pipe):
     assert pipe.corpus_docs().count() == n_docs
 
 
-def test_tombstone_purge_and_edge_exclusion(spark, pipe):
+def test_tombstone_purge_and_edge_exclusion(spark, pipe, tmp_path, monkeypatch):
     pipe.process_batch(_turns(spark, _conv("c_dead", BASE)))
     tomb = spark.createDataFrame([("c_dead",)], ["conv_id"])
     r = pipe.process_batch(
@@ -83,6 +89,30 @@ def test_tombstone_purge_and_edge_exclusion(spark, pipe):
     assert r["new_edges"].count() == 0  # J5: match suppressed
     pipe.purge_deleted(tomb)
     assert pipe.corpus_docs().where(F.col("conv_id") == "c_dead").count() == 0
+
+    # tombstones read from the warehouse itself: the batch's persist pool
+    # rewrites corpus_docs while scoring runs, so J5 must not read it lazily.
+    # The inline executor forces the schedule where the docs merge lands
+    # before scoring starts; c_new11 hashes into c_dead's corpus_docs bucket,
+    # so that merge replaces the file the tombstone frame lists.
+    class InlineExecutor(ThreadPoolExecutor):
+        def submit(self, fn, *args, **kwargs):
+            f = Future()
+            try:
+                f.set_result(fn(*args, **kwargs))
+            except Exception as e:
+                f.set_exception(e)
+            return f
+
+    pipe2 = IncrementalPipeline(Warehouse(spark, str(tmp_path / "wh_tomb")), PipelineConfig())
+    pipe2.process_batch(_turns(spark, _conv("c_dead", BASE)))
+    tomb2 = pipe2.corpus_docs().where(F.col("conv_id") == "c_dead")
+    monkeypatch.setattr(ingest, "ThreadPoolExecutor", InlineExecutor)
+    r = pipe2.process_batch(
+        _turns(spark, _conv("c_new11", BASE, ts=TS + timedelta(days=1))), tombstones=tomb2
+    )
+    assert r["new_edges"].count() == 0
+    assert {x.conv_id for x in pipe2.corpus_docs().collect()} == {"c_dead", "c_new11"}
 
 
 def test_retention_sweep(spark, tmp_path):
@@ -159,6 +189,24 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     out = wh.read("t")
     assert out.count() == 10_001
     assert {r.v for r in out.where(F.col("conv_id").isin("c5", "cNEW")).collect()} == {2}
+
+
+def test_bucketed_upsert_rejects_rows_outside_touched(spark, tmp_path):
+    """A pre-computed ``touched`` list that misses a row's bucket must raise
+    before any bucket is swapped — not silently drop the row."""
+    wh = Warehouse(spark, str(tmp_path / "whtouch"))
+    base = spark.range(1_000).select(
+        F.concat(F.lit("c"), F.col("id").cast("string")).alias("conv_id"), F.lit(1).cast("long").alias("v")
+    )
+    wh.upsert("t", base, key="conv_id", n_buckets=16)
+    before = sorted(wh.read("t").collect())
+    inc = spark.createDataFrame([(f"c{i}", 2) for i in range(50)] + [("cNEW", 2)], "conv_id string, v long")
+    touched = wh._touched_buckets(inc, "conv_id", 16)
+    assert len(touched) > 1
+    with pytest.raises(ValueError, match="not in touched"):
+        wh.upsert("t", inc, key="conv_id", touched=touched[:1])
+    assert sorted(wh.read("t").collect()) == before
+    assert not [d for d in os.listdir(wh.root) if d.startswith("_staging_")]
 
 
 def test_band_probe_io_proportional_to_batch(spark, pipe):
@@ -343,3 +391,62 @@ def test_incremental_cluster_update_matches_full_recompute(spark, tmp_path):
     assert got_i == {
         "c_a": "c_a", "d_b": "c_a", "e_c": "c_a", "x_1": "x_1", "y_2": "x_1",
     }
+
+
+def test_repair_rebuilds_lost_reps_and_clusters(spark, tmp_path):
+    """A corpus without ``corpus_reps`` and ``clusters`` (written before the
+    index existed, or a first batch that died between its writes) is
+    repaired at the next batch start: the exact cross-batch edges are still
+    found and the clusters equal an untouched control warehouse's."""
+    other = ["entirely different content in this conversation " * 4, "another reply " * 6]
+    b1 = _turns(spark, _conv("c_a", BASE) + _conv("x_1", other))
+    b2 = _turns(
+        spark,
+        _conv("d_b", BASE, ts=TS + timedelta(days=1)) + _conv("y_2", other, ts=TS + timedelta(days=1)),
+    )
+    control, repaired = (
+        IncrementalPipeline(Warehouse(spark, str(tmp_path / name)), PipelineConfig())
+        for name in ("wh_control", "wh_repaired")
+    )
+    control.process_batch(b1)
+    repaired.process_batch(b1)
+    wh = repaired.wh
+    for table in ("corpus_reps", "clusters"):
+        shutil.rmtree(wh._path(table))
+        os.remove(wh._meta_path(table))
+
+    r = repaired.process_batch(b2)
+    exact = r["new_edges"].where(F.col("method") == "exact").collect()
+    assert {(e.conv_id_a, e.conv_id_b) for e in exact} == {("c_a", "d_b"), ("x_1", "y_2")}
+    want = {x.conv_id: x.cluster_id for x in control.process_batch(b2)["clusters"].collect()}
+    got = {x.conv_id: x.cluster_id for x in r["clusters"].collect()}
+    assert got == want == {"c_a": "c_a", "d_b": "c_a", "x_1": "x_1", "y_2": "x_1"}
+    repairs = wh.read("_metrics").where(F.col("stage") == "ingest.repair").collect()
+    assert {json.loads(x["extra"])["table"] for x in repairs} == {"corpus_reps", "clusters"}
+
+
+def test_persist_pool_waits_for_inflight_writes_on_error(spark, pipe, monkeypatch):
+    """A failed persist must not leave another table write running after
+    process_batch raises: the clusters swap (slowed by 2 s here) lands
+    before the edges failure propagates."""
+    pipe.process_batch(_turns(spark, _conv("c_a", BASE)))
+    upsert, upsert_replace = Warehouse.upsert, Warehouse.upsert_replace
+    swapped = []
+
+    def failing_upsert(self, table, *args, **kwargs):
+        if table == "edges":
+            raise RuntimeError("injected edges failure")
+        return upsert(self, table, *args, **kwargs)
+
+    def slow_upsert_replace(self, table, df):
+        time.sleep(2)
+        upsert_replace(self, table, df)
+        if table == "clusters":
+            swapped.append(time.monotonic())
+
+    monkeypatch.setattr(Warehouse, "upsert", failing_upsert)
+    monkeypatch.setattr(Warehouse, "upsert_replace", slow_upsert_replace)
+    with pytest.raises(RuntimeError, match="injected edges failure"):
+        pipe.process_batch(_turns(spark, _conv("d_b", BASE, ts=TS + timedelta(days=1))))
+    raised = time.monotonic()
+    assert swapped and swapped[0] <= raised
